@@ -4778,8 +4778,8 @@ def q_soft_dedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: partial-agg groupBy count + join back on xxhash64(t) —
     8-byte keys (never raw text) through the exchange, and the hot-key
     worst case map-side-combines instead of concentrating in one
-    window task (measured 1.5x at 1 M rows / 50% hot key,
-    tools/probe_round5b_scale.py); the oracle groups by t directly
+    window task (measured 1.5x at 1 M rows / 50% hot key, BENCH.md
+    "Worst-case probes at 1 M rows"); the oracle groups by t directly
     (hash collisions at ~n^2/2^65 are the documented engine-side risk,
     same contract as dedup_new_vs_corpus)."""
     from file_dedup_rust_spark.operators.exact import duplication_weights

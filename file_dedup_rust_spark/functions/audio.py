@@ -14,7 +14,7 @@ No external audio libraries (sandbox constraint); codecs supported:
   * wav       — RIFF/WAVE container: PCM16 (fmt 1), G.711 mu-law /
                 A-law (fmt 7 / 6), and IMA ADPCM (fmt 0x11) 'data'
                 chunks — the COMPRESSED real-decode branch for audio
-                (round 5), next to baseline JPEG on the image side
+                (round 5)
   * flac      — real LOSSLESS compressed decode (functions/flac.py,
                 round 5): a wav->flac re-upload decodes bit-identical,
                 so the pcm_exact tier catches the container flip with

@@ -34,13 +34,13 @@ def splitmix64(x: np.ndarray) -> np.ndarray:
     return z
 
 
-# Only small streams are cacheable: the hot callers (per-position
-# k-gram multipliers, MinHash params, SimHash planes) all request
-# n <= a few thousand with a handful of distinct seeds.  Large
-# one-off streams (e.g. per-payload pixel synthesis in
-# multimodal.fake_decode_image) must NOT enter the cache — a stream of
-# unique (seed, n=width*height) keys would pin up to 256 * w*h*8 bytes
-# per executor Python worker and evict the hot entries.
+# Only small streams are cacheable: the callers (per-position k-gram
+# multipliers, MinHash params, band-hash multipliers, the audio SimHash
+# planes) request a handful of distinct (seed, n) keys per config.  The
+# largest is the SimHash planes, simhash_bits * n_feat * 4 = 61,440
+# values at the default config; a larger config (more bits, segments
+# or bands) is computed fresh instead of pinning up to 256 * n * 8
+# bytes per executor Python worker in the LRU.
 _RNG_CACHE_MAX_N = 65_536
 
 

@@ -116,8 +116,8 @@ def duplication_weights(keyed: DataFrame, key_col: str = "k") -> DataFrame:
 
     Plan shape: partial-agg groupBy count + equi-join back on the key —
     deliberately NOT a window count.  Measured at the hot-key worst
-    case (1 M rows, ONE key on half the corpus,
-    tools/probe_round5b_scale.py): the window variant concentrates the
+    case (1 M rows, ONE key on half the corpus, BENCH.md "Worst-case
+    probes at 1 M rows"): the window variant concentrates the
     500 k-row partition in one task (a window cannot split a hot
     partition) at 11.5 s, while the groupBy's map-side combine crosses
     the shuffle as one partial row per task and AQE can skew-split the

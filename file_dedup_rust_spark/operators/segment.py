@@ -1,6 +1,6 @@
 """Long-form audio segmentation: split clips into bounded, overlapping
-training segments — the audio analog of the multimodal frame-sample
-step (and of text chunking, operators/packing.py pack_chunks).
+training segments — the audio analog of text chunking
+(operators/packing.py pack_chunks).
 
 ASR/TTS trainers consume bounded-length windows (4-30 s), while a
 crawled corpus carries arbitrary-length recordings.  The standard prep

@@ -13,11 +13,12 @@ always-on worker semantics — same code.
 
 Two stateful surfaces are provided:
 
-* `incremental_exact_dedup` — foreachBatch: join each micro-batch's
-  sha256 against the accumulated corpus store (exact-dup probe J1),
-  emit match rows, append the batch to the store.  The store is plain
-  parquet here; on a cluster it would be the Iceberg signatures table
-  (MERGE INTO), same flow.
+* `incremental_near_dedup` — foreachBatch: probe each micro-batch
+  against the accumulated signature stores for every batch edge
+  family, the exact sha256 probe (J1) included, emit match rows,
+  append the batch to the stores.  The stores are plain parquet here;
+  on a cluster they would be the Iceberg signatures table (MERGE
+  INTO), same flow.
 * `streaming_cluster_assign` — applyInPandasWithState: running
   cluster assignment keyed by sha256; state = first clip_id seen for
   the hash (the reference's create-or-join cluster step,
@@ -271,84 +272,6 @@ def read_clip_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 16)
         .parquet(landing_dir)
     )
-
-
-def incremental_exact_dedup(
-    spark: SparkSession,
-    landing_dir: str,
-    store_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    cfg: DedupConfig | None = None,
-    available_now: bool = True,
-    compact_every: int = 16,
-):
-    """Start the incremental exact-dedup stream.
-
-    Each micro-batch: signatures (one mapInPandas pass, bytes dropped)
-    -> probe sha256 against the store -> write matches and batch
-    signatures idempotently (batch_id partitions; a retried batch
-    overwrites itself) -> every `compact_every` batches, fold committed
-    partitions into the base snapshot.  Returns the StreamingQuery.
-    """
-    cfg = cfg or DedupConfig()
-    clips = read_clip_stream(spark, landing_dir)
-    sigs = compute_signatures(clips, cfg).select(
-        "clip_id", "sha256", "simhash", "t_norm"
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        b = batch_df.persist()
-        try:
-            spark_l = b.sparkSession
-            store = read_store(spark_l, store_dir)
-            corpus = (
-                store.select(F.col("clip_id").alias("matched_clip_id"), "sha256")
-                if store is not None
-                else None
-            )
-            # within-batch dups: star to the batch-min clip_id per hash
-            from pyspark.sql import Window
-
-            w = Window.partitionBy("sha256")
-            intra = (
-                b.withColumn("rep", F.min("clip_id").over(w))
-                .filter(F.col("clip_id") != F.col("rep"))
-                .select(
-                    "clip_id", "sha256",
-                    F.col("rep").alias("matched_clip_id"),
-                    F.lit("batch").alias("match_scope"),
-                )
-            )
-            if corpus is not None:
-                cross = (
-                    b.join(corpus, "sha256")
-                    .select(
-                        "clip_id", "sha256", "matched_clip_id",
-                        F.lit("corpus").alias("match_scope"),
-                    )
-                )
-                matches = intra.unionByName(cross)
-            else:
-                matches = intra
-            store_write(matches, out_dir, batch_id)
-            store_write(
-                b.select("clip_id", "sha256", "simhash", "t_norm"),
-                store_dir, batch_id,
-            )
-            if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-                compact_store(spark_l, store_dir, int(batch_id) - 1)
-        finally:
-            b.unpersist()
-
-    writer = (
-        sigs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def incremental_near_dedup(

@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 
 from file_dedup_rust_spark import datagen
 from file_dedup_rust_spark.streaming.incremental import (
-    incremental_exact_dedup,
     streaming_cluster_assign,
     windowed_ingest_stats,
 )
@@ -49,11 +48,16 @@ def two_batches(spark, tmp_path_factory):
     return landing, root, exact_children
 
 
-def test_incremental_exact_dedup_finds_cross_batch_dups(spark, two_batches, tmp_path):
+def test_incremental_near_dedup_finds_cross_batch_exact_dups(
+    spark, two_batches, cfg, tmp_path
+):
     """Drop 1 (bases) drains, drop 2 (children) arrives, the SAME
     checkpoint resumes — real restart semantics, so batch numbering
     continues and the idempotent batch_id partitions stay distinct."""
-    from file_dedup_rust_spark.streaming.incremental import read_store
+    from file_dedup_rust_spark.streaming.incremental import (
+        incremental_near_dedup,
+        read_store,
+    )
 
     landing, root, exact_children = two_batches
     flat = str(tmp_path / "flat-landing")
@@ -64,25 +68,22 @@ def test_incremental_exact_dedup_finds_cross_batch_dups(spark, two_batches, tmp_
     spark.read.parquet(f"{landing}/batch=1").coalesce(1).write.mode(
         "append"
     ).parquet(flat)
-    q = incremental_exact_dedup(spark, flat, store, out, ck)
-    q.awaitTermination(120)
+    q = incremental_near_dedup(spark, flat, store, out, ck, cfg)
+    q.awaitTermination(180)
     # drop 2: children land; same checkpoint picks up only the new file
     spark.read.parquet(f"{landing}/batch=2").coalesce(1).write.mode(
         "append"
     ).parquet(flat)
-    q2 = incremental_exact_dedup(spark, flat, store, out, ck)
-    q2.awaitTermination(120)
+    q2 = incremental_near_dedup(spark, flat, store, out, ck, cfg)
+    q2.awaitTermination(180)
 
-    matches = read_store(spark, out)
-    got = {
-        (r.clip_id, r.matched_clip_id) for r in matches.collect()
-    }
+    matches = read_store(spark, out).filter("match_kind = 'exact'")
+    got = {(r.clip_id, r.matched_clip_id) for r in matches.collect()}
     # every planted exact child (batch 2) must match its base (batch 1)
-    want = set(exact_children)
-    missing = want - got
+    missing = set(exact_children) - got
     assert not missing, f"missed cross-batch exact dups: {missing}"
-    # store accumulated both batches
-    assert read_store(spark, store).count() == 120
+    # signature store accumulated both batches
+    assert read_store(spark, f"{store}/sigs").count() == 120
 
 
 def test_streaming_cluster_assign_stateful(spark, two_batches):
