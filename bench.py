@@ -14,7 +14,10 @@ Headline workloads:
   * minhash_lsh_pairs — text near-dup dedup over documents.parquet.
   * knn_topk — brute-force cosine top-10 over embeddings.parquet.
   * ann_ivf_topk — the IVF scale path over the same table.
+  * ann_ivf_pq_topk — the same IVF path with PQ-coded inverted lists.
   * cc_clusters — connected components over dup edges on documents.
+  * cc_distributed — the same components forced through the
+    distributed pointer-jumping rounds (driver and coded solves off).
 
 Scaling-efficiency evidence (north rule: N vs 4N executors) is produced
 by tools/scaling_bench.py, which re-runs clips_pipeline at local[8] and

@@ -1410,10 +1410,8 @@ FROM ranked WHERE rn <= 3 GROUP BY lang
 
 
 def q_events_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-time tumbling-window aggregation (the batch form of
-    streaming/incremental.windowed_ingest_stats — same F.window
-    operator Structured Streaming uses, so the batch oracle pins the
-    streaming aggregation semantics): hourly counts + mean value per
+    """Event-time tumbling-window aggregation (F.window, the same
+    operator Structured Streaming windows with): hourly counts + mean value per
     event type.  F.window aligns tumbling windows to the epoch, which
     for whole hours equals date_trunc('hour').
 

@@ -52,17 +52,6 @@ def jaccard(text_a: str | None, text_b: str | None, cfg: DedupConfig) -> float:
     return inter / union if union else 0.0
 
 
-def signature_jaccard(sig_a: np.ndarray, sig_b: np.ndarray) -> float:
-    """MinHash-estimated Jaccard = fraction of agreeing lanes.
-
-    This is the quantity thresholded at 0.8 (reference P3,
-    deduplication_service.rs:347-348): both the pipeline verifier and
-    the numpy oracle use THIS estimator, so they agree bit-exactly."""
-    if sig_a.size == 0 or sig_b.size == 0:
-        return 0.0
-    return float(np.mean(sig_a == sig_b))
-
-
 def transcript_fingerprints(text: str | None, cfg: DedupConfig) -> np.ndarray:
     """Winnowing fingerprints (uint64) for containment candidates."""
     return hashing.winnow_fingerprints(

@@ -295,163 +295,6 @@ def train_codebook(
     return cents
 
 
-def kmeans_parallel_codebook(
-    e: DataFrame,
-    k: int,
-    rounds: int = 4,
-    oversample: int | None = None,
-    iters: int = 8,
-    seed: int = 12345,
-) -> np.ndarray:
-    """Distributed k-means|| codebook (Bahmani, Moseley, Vattani,
-    Kumar, Vassilvitskii — "Scalable k-means++", VLDB 2012): the
-    production centroid path for when even a 262k bounded sample
-    under-represents the corpus (a 10^12-row table with rare tail
-    modes).
-
-    `train_codebook` above sketches the data ONCE and clusters the
-    sketch; a uniform sketch can miss a small far-out mode entirely.
-    k-means|| instead runs `rounds` full distributed passes, each
-    sampling points with probability proportional to their squared
-    distance from the current candidate set (far regions are found
-    BECAUSE they are far), then solves weighted k-means on the
-    bounded candidate set locally.
-
-    Scale shape — every non-scan artifact is bounded by construction:
-      * per-round cost pass: one mapInPandas BLAS scan against the
-        broadcast candidate matrix (<= (1 + rounds*4l) * d * 8 bytes);
-      * per-round candidate collect: expectation `l` rows, hard-capped
-        at 4l by taking the smallest acceptance ratios first;
-      * weights: one groupBy over candidate indices (<= |C| rows).
-    Determinism: the Bernoulli draws are hash-uniforms
-    u = pmod(xxhash64(vec_id, round_salt), 2^31) / 2^31 — replayable
-    for a fixed corpus, no RNG state on executors; the local finish
-    is seeded numpy.  Returns unit-norm float64 (k, d) — the same
-    contract as `train_codebook`, so `build_ivf_index(init=...)`
-    swaps trainers without touching assignment or probe semantics.
-    """
-    l = oversample or 2 * k
-    spark = e.sparkSession
-    base = e.select("vec_id", "embedding")
-
-    first = base.orderBy(F.xxhash64("vec_id"), "vec_id").limit(1).collect()
-    if not first:
-        raise ValueError("kmeans_parallel_codebook: empty input")
-    c0 = np.asarray(first[0]["embedding"], dtype=np.float64)
-    c0 /= max(np.linalg.norm(c0), 1e-300)
-    cand = [c0]
-
-    def _cost_df(C: np.ndarray):
-        bc = spark.sparkContext.broadcast(C)
-
-        def costs(batches):
-            M = bc.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-                V /= np.maximum(
-                    np.linalg.norm(V, axis=1, keepdims=True), 1e-300
-                )
-                sim = (V @ M.T).max(axis=1)
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pdf["vec_id"].to_numpy(dtype=np.int64),
-                        "d2": np.maximum(2.0 - 2.0 * sim, 0.0),
-                    }
-                )
-
-        return base.mapInPandas(costs, "vec_id long, d2 double"), bc
-
-    for r in range(rounds):
-        # persist: the psi aggregate and the candidate pick below share
-        # ONE BLAS scan per round (the docstring's cost contract)
-        dcost, bc_r = _cost_df(np.stack(cand))
-        dcost = dcost.persist()
-        psi = dcost.agg(F.sum("d2")).first()[0] or 0.0
-        if psi <= 0:  # every point coincides with a candidate
-            dcost.unpersist()
-            bc_r.destroy()
-            break
-        # accept iff u < l * d2 / psi; rank by u/d2 so a pathological
-        # round overshooting its expectation of l stays hard-capped
-        u = (
-            F.pmod(
-                F.xxhash64("vec_id", F.lit(seed + 7919 * (r + 1))),
-                F.lit(2**31),
-            ).cast("double")
-            / F.lit(float(2**31))
-        )
-        picked = (
-            dcost.withColumn("u", u)
-            .filter(
-                F.col("u") * F.lit(float(psi)) < F.lit(float(l)) * F.col("d2")
-            )
-            .withColumn(
-                "ratio",
-                F.col("u")
-                * F.lit(float(psi))
-                / F.greatest(F.col("d2"), F.lit(1e-300)),
-            )
-            .orderBy("ratio", "vec_id")
-            .limit(4 * l)
-            .select("vec_id")
-        )
-        for row in picked.join(base, "vec_id").orderBy("vec_id").collect():
-            v = np.asarray(row["embedding"], dtype=np.float64)
-            v /= max(np.linalg.norm(v), 1e-300)
-            cand.append(v)
-        dcost.unpersist()
-        bc_r.destroy()
-
-    C = np.stack(cand)
-    bc = spark.sparkContext.broadcast(C)
-
-    def assign(batches):
-        M = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            V /= np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-300)
-            yield pd.DataFrame(
-                {"a": (V @ M.T).argmax(axis=1).astype(np.int64)}
-            )
-
-    w = np.zeros(len(C))
-    for row in base.mapInPandas(assign, "a long").groupBy("a").count().collect():
-        w[row["a"]] = float(row["count"])
-    bc.destroy()
-
-    # local finish: weighted k-means++ seeding + weighted Lloyd over
-    # the bounded candidate set (|C| ~ 1 + rounds*l rows)
-    rng = np.random.default_rng(seed)
-    k_eff = min(k, len(C))
-    probs = w / w.sum() if w.sum() > 0 else np.full(len(C), 1.0 / len(C))
-    centers = [C[rng.choice(len(C), p=probs)]]
-    for _ in range(1, k_eff):
-        d2 = np.maximum(2.0 - 2.0 * (C @ np.stack(centers).T).max(axis=1), 0.0)
-        pw = d2 * w
-        tot = pw.sum()
-        if tot <= 0:
-            centers.append(C[rng.choice(len(C), p=probs)])
-            continue
-        centers.append(C[rng.choice(len(C), p=pw / tot)])
-    cents = np.stack(centers)
-    for _ in range(iters):
-        a = np.argmax(C @ cents.T, axis=1)
-        sums = np.zeros_like(cents)
-        np.add.at(sums, a, C * w[:, None])
-        cnt = np.zeros(k_eff)
-        np.add.at(cnt, a, w)
-        nz = cnt > 0
-        upd = sums[nz] / cnt[nz, None]
-        cents[nz] = upd / np.maximum(
-            np.linalg.norm(upd, axis=1, keepdims=True), 1e-300
-        )
-    return cents
-
-
 # ---------------------------------------------------------------------------
 # product quantization: the petabyte swap for the inverted lists
 # (Jegou, Douze, Schmid, "Product Quantization for Nearest Neighbor
@@ -522,255 +365,6 @@ def default_k(n: int, cap: int = 4096) -> int:
     return max(4, min(int(math.ceil(3.0 * math.sqrt(max(n, 1)))), cap))
 
 
-def _train(
-    e: DataFrame, k: int, init: str, sample_cap: int, seed: int
-) -> np.ndarray:
-    """Codebook trainer dispatch for the persistent index builders:
-    'sample' = bounded-sketch Lloyd (default; one scan), 'kmeans||' =
-    distributed k-means|| (rounds+2 scans, finds rare far-out modes a
-    uniform sketch misses).  Same (k, d) unit-norm contract, so
-    assignment and probing are untouched either way."""
-    if init == "kmeans||":
-        return kmeans_parallel_codebook(e, k, seed=seed)
-    if init != "sample":
-        raise ValueError(f"unknown codebook init {init!r}")
-    return train_codebook(e, k, sample_cap=sample_cap, seed=seed)
-
-
-def build_ivf_index(
-    e: DataFrame,
-    io,
-    name: str = "ivf",
-    k_cells: int | None = None,
-    assign_m: int = 8,
-    sample_cap: int = 262_144,
-    seed: int = 12345,
-    init: str = "sample",
-):
-    """Build + checkpoint a persistent IVF index — the batch analog of
-    the reference's OpenSearch HNSW index that outlives any one query
-    (S5 embedding sink, deduplication_service.rs:256-298; index
-    definition iac/opensearch_indexes.tf:8-14).
-
-    Two tables land through `io` (a TableIO; Iceberg in production,
-    manifest-committed parquet here):
-      * ``{name}_codebook`` — (cell int, centroid array<double>), k rows
-      * ``{name}_cells``    — the inverted lists: (cell, vec_id,
-        embedding) with every vector multi-assigned to its `assign_m`
-        nearest cells
-    Returns (codebook ndarray, cells DataFrame).  Rebuilding with the
-    same parameters resumes from the checkpoint (fingerprint-gated)."""
-    import json
-
-    n = e.count()
-    k = k_cells or default_k(n)
-    fp = json.dumps(
-        {"k": k, "m": assign_m, "cap": sample_cap, "seed": seed, "n": n,
-         "init": init},
-        sort_keys=True,
-    )
-    spark = e.sparkSession
-
-    def build_codebook() -> DataFrame:
-        cb = _train(e, k, init, sample_cap, seed)
-        return spark.createDataFrame(
-            [(i, row.tolist()) for i, row in enumerate(cb)],
-            "cell int, centroid array<double>",
-        )
-    cb_df, _ = io.stage(f"{name}_codebook", fp, build_codebook)
-    rows = cb_df.orderBy("cell").collect()  # k rows — bounded by k cap
-    codebook = np.array([r["centroid"] for r in rows], dtype=np.float64)
-
-    def build_cells() -> DataFrame:
-        assigned = _assign_cells(e, codebook, assign_m, assign_m)
-        return assigned.select(
-            F.explode("db_cells").alias("cell"), "vec_id", "embedding"
-        )
-    cells, _ = io.stage(
-        f"{name}_cells", fp, build_cells, parents=[f"{name}_codebook"]
-    )
-    return codebook, cells
-
-
-def load_ivf_codebook(io, name: str = "ivf") -> np.ndarray:
-    """Read the persisted `{name}_codebook` stage back as the bounded
-    (k, d) float64 ndarray every IVF entry point takes."""
-    rows = io.read(f"{name}_codebook").orderBy("cell").collect()
-    if not rows:
-        raise ValueError(f"empty or missing {name}_codebook")
-    return np.array([r["centroid"] for r in rows], dtype=np.float64)
-
-
-def append_ivf_index(
-    batch: DataFrame,
-    io,
-    batch_id: str,
-    name: str = "ivf",
-    assign_m: int = 8,
-):
-    """Incremental index maintenance: assign ONLY the new batch's
-    vectors with the PERSISTED codebook and commit them as a delta
-    inverted-list table `{name}_cells_d{batch_id}` — no retrain, no
-    rewrite of the existing lists (the LSM shape: at 10^12 rows the
-    base cells table is petabytes; an append that re-materializes it
-    would cost a full-corpus write per batch).
-
-    Because cell membership is a pure function of (vector, codebook),
-    the union of base + delta lists is EXACTLY the cells table a full
-    rebuild at the same codebook would produce — probe results are
-    identical (pinned by tests/test_ann_quality.py).  Re-running with
-    the same batch_id resumes the committed delta (idempotent ingest,
-    same contract as the streaming stores).  Codebook drift under a
-    shifting distribution is a rebuild decision, not an append one —
-    monitor per-cell delta volume in the manifest for that.
-
-    Returns (codebook, delta_cells DataFrame)."""
-    import json
-
-    codebook = load_ivf_codebook(io, name)
-    cb_fp = (io.manifest_entry(f"{name}_codebook") or {}).get(
-        "fingerprint", ""
-    )
-    fp = json.dumps(
-        {"codebook": cb_fp, "batch": batch_id, "m": assign_m},
-        sort_keys=True,
-    )
-
-    def build_delta() -> DataFrame:
-        assigned = _assign_cells(batch, codebook, assign_m, assign_m)
-        return assigned.select(
-            F.explode("db_cells").alias("cell"), "vec_id", "embedding"
-        )
-
-    delta, _ = io.stage(
-        f"{name}_cells_d{batch_id}", fp, build_delta,
-        parents=[f"{name}_codebook"],
-    )
-    return codebook, delta
-
-
-def read_ivf_cells(io, name: str = "ivf") -> DataFrame:
-    """The live inverted lists: the base `{name}_cells` table unioned
-    with every committed `{name}_cells_d*` delta (manifest-ordered) —
-    what `ivf_probe_index` should scan after any number of appends."""
-    cells = io.read(f"{name}_cells")
-    prefix = f"{name}_cells_d"
-    for e in io.manifest_listing(limit=10_000):
-        if e.get("stage", "").startswith(prefix) and (
-            e.get("status") == "committed"
-        ):
-            cells = cells.unionByName(io.read(e["stage"]))
-    return cells
-
-
-def build_ivf_pq_index(
-    e: DataFrame,
-    io,
-    name: str = "ivfpq",
-    k_cells: int | None = None,
-    assign_m: int = 8,
-    n_sub: int = 8,
-    n_cent: int = 256,
-    sample_cap: int = 262_144,
-    seed: int = 12345,
-    init: str = "sample",
-):
-    """Build + checkpoint a PQ-compressed IVF index: same layout as
-    `build_ivf_index` but the inverted lists store n_sub-byte PQ codes
-    instead of d*8-byte vectors — the petabyte swap the uncompressed
-    docstring names.  Tables:
-      * ``{name}_codebook`` — (cell, centroid), k rows
-      * ``{name}_pq``       — (sub, cent, centroid), n_sub*n_cent rows
-      * ``{name}_cells``    — (cell, vec_id, code binary(n_sub))
-    Returns (codebook ndarray, pq ndarray, cells DataFrame).  Probing
-    needs the original embeddings table for the exact re-rank
-    (`ivf_pq_probe_index`); the manifest's row/byte counters evidence
-    the compression (tests/test_ann_quality.py)."""
-    import json
-
-    n = e.count()
-    k = k_cells or default_k(n)
-    fp = json.dumps(
-        {"k": k, "m": assign_m, "cap": sample_cap, "seed": seed, "n": n,
-         "pq": [n_sub, n_cent], "init": init},
-        sort_keys=True,
-    )
-    spark = e.sparkSession
-
-    def build_codebook() -> DataFrame:
-        cb = _train(e, k, init, sample_cap, seed)
-        return spark.createDataFrame(
-            [(i, row.tolist()) for i, row in enumerate(cb)],
-            "cell int, centroid array<double>",
-        )
-
-    cb_df, _ = io.stage(f"{name}_codebook", fp, build_codebook)
-    rows = cb_df.orderBy("cell").collect()
-    codebook = np.array([r["centroid"] for r in rows], dtype=np.float64)
-
-    def build_pq() -> DataFrame:
-        cents = train_pq(e, n_sub=n_sub, n_cent=n_cent,
-                         sample_cap=sample_cap, seed=seed + 1)
-        return spark.createDataFrame(
-            [
-                (m, c, cents[m, c].tolist())
-                for m in range(cents.shape[0])
-                for c in range(cents.shape[1])
-            ],
-            "sub int, cent int, centroid array<double>",
-        )
-
-    pq_df, _ = io.stage(f"{name}_pq", fp, build_pq)
-    prows = pq_df.orderBy("sub", "cent").collect()
-    n_cent_eff = max(r["cent"] for r in prows) + 1
-    dsub = len(prows[0]["centroid"])
-    pq = np.empty((n_sub, n_cent_eff, dsub))
-    for r in prows:
-        pq[r["sub"], r["cent"]] = r["centroid"]
-    def build_cells() -> DataFrame:
-        assigned = _assign_cells(e, codebook, assign_m, assign_m)
-        return _encode_cells(assigned, pq)
-
-    cells, _ = io.stage(
-        f"{name}_cells", fp, build_cells,
-        parents=[f"{name}_codebook", f"{name}_pq"],
-    )
-    return codebook, pq, cells
-
-
-def _encode_cells(assigned: DataFrame, pq: np.ndarray) -> DataFrame:
-    """assigned (vec_id, normalized embedding, db_cells) -> exploded
-    PQ-coded inverted-list rows (cell, vec_id, code binary(n_sub))."""
-    spark = assigned.sparkSession
-    bc_pq = spark.sparkContext.broadcast(pq)
-
-    def encode(batches):
-        P = bc_pq.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame(
-                    {"vec_id": pd.Series([], dtype=np.int64),
-                     "db_cells": pd.Series([], dtype=object),
-                     "code": pd.Series([], dtype=object)}
-                )
-                continue
-            V = np.stack(pdf["embedding"].to_numpy())  # already normalized
-            codes = _pq_encode_batch(V, P)
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"].to_numpy(dtype=np.int64),
-                 "db_cells": pdf["db_cells"].to_numpy(),
-                 "code": [c.tobytes() for c in codes]}
-            )
-
-    coded = assigned.select("vec_id", "embedding", "db_cells").mapInPandas(
-        encode,
-        schema="vec_id long, db_cells array<int>, code binary",
-    )
-    return coded.select(
-        F.explode("db_cells").alias("cell"), "vec_id", "code"
-    )
-
-
 def ivf_pq_topk(
     e: DataFrame,
     top_k: int = 10,
@@ -784,7 +378,7 @@ def ivf_pq_topk(
     codebook: np.ndarray | None = None,
     pq: np.ndarray | None = None,
 ) -> DataFrame:
-    """One-shot PQ-IVF ANN top-k (no persistent index): train codebook
+    """One-shot PQ-IVF ANN top-k: train codebook
     + product quantizer on the bounded sample, encode the corpus into
     8-byte cell codes, ADC-scan + exact re-rank — `ivf_topk` with the
     inverted lists compressed n_sub/(d*8)-fold.  Like `ivf_topk`, the
@@ -792,11 +386,7 @@ def ivf_pq_topk(
     posexploded relation (assign+encode run in a single narrow Arrow
     chain — one scan of `e`, one shuffle); each replicated row carries
     embedding + code, the db role reading the code, the probe role the
-    embedding.  Deterministic (seeded sample/Lloyd).
-
-    The index-backed split (`build_ivf_pq_index` + `ivf_pq_probe_index`)
-    is where PQ's byte win shows at scale: there the stored/replicated
-    cell payload is codes only."""
+    embedding.  Deterministic (seeded sample/Lloyd)."""
     if codebook is None or pq is None:
         n = e.count()
         k = k_cells or default_k(n)
@@ -857,32 +447,6 @@ def ivf_pq_topk(
     return _exact_rerank(cand, e, e, top_k, round_digits)
 
 
-def ivf_pq_probe_index(
-    probes: DataFrame,
-    codebook: np.ndarray,
-    pq: np.ndarray,
-    cells: DataFrame,
-    corpus: DataFrame,
-    top_k: int = 10,
-    nprobe: int = 16,
-    rerank_r: int = 48,
-    round_digits: int = 4,
-) -> DataFrame:
-    """Query a PQ-compressed IVF index: per cell an ADC scan (one
-    (probes x n_cent) table per subspace, then an (probes x codes)
-    gather-sum) keeps the top `rerank_r` candidates per probe per
-    cell; survivors re-rank EXACTLY on the full vectors from `corpus`
-    (two equi-joins + a vectorized dot kernel) before the global
-    top-k window.  Output schema identical to `ivf_topk`; quality is
-    the ADC-survivor recall, gated in tests/test_ann_quality.py."""
-    probe = _assign_cells(probes, codebook, 0, nprobe).select(
-        F.explode("probe_cells").alias("cell"), "vec_id", "embedding"
-    )
-    return _pq_cell_rank(
-        probe, pq, cells, probes, corpus, top_k, rerank_r, round_digits
-    )
-
-
 _ADC_EMPTY = {
     "vec_id": pd.Series([], dtype=np.int64),
     "neighbor_id": pd.Series([], dtype=np.int64),
@@ -893,8 +457,7 @@ def _adc_frames(
     p_pdf: pd.DataFrame, c_pdf: pd.DataFrame, Q: np.ndarray, rerank_r: int
 ) -> pd.DataFrame:
     """ADC-scan one cell: probe embeddings (p_pdf, normalized) against
-    PQ codes (c_pdf["code"]), keep top-rerank_r candidates per probe.
-    Shared by the cogrouped index-probe path and the fused one-shot."""
+    PQ codes (c_pdf["code"]), keep top-rerank_r candidates per probe."""
     if len(p_pdf) == 0 or len(c_pdf) == 0:
         return pd.DataFrame(_ADC_EMPTY)
     P = np.stack(p_pdf["embedding"].to_numpy())  # already normalized
@@ -919,31 +482,6 @@ def _adc_frames(
         {"vec_id": p_ids[rows_idx[keep]],
          "neighbor_id": c_ids[top[keep]]}
     )
-
-
-def _pq_cell_rank(
-    probe: DataFrame,
-    pq: np.ndarray,
-    cells: DataFrame,
-    probes: DataFrame,
-    corpus: DataFrame,
-    top_k: int,
-    rerank_r: int,
-    round_digits: int,
-) -> DataFrame:
-    spark = probe.sparkSession
-    bc_pq = spark.sparkContext.broadcast(pq)
-
-    def cell_adc(p_pdf: pd.DataFrame, c_pdf: pd.DataFrame) -> pd.DataFrame:
-        return _adc_frames(p_pdf, c_pdf, bc_pq.value, rerank_r)
-
-    cand = (
-        probe.groupBy("cell")
-        .cogroup(cells.groupBy("cell"))
-        .applyInPandas(cell_adc, schema="vec_id long, neighbor_id long")
-        .distinct()  # multi-cell duplicates
-    )
-    return _exact_rerank(cand, probes, corpus, top_k, round_digits)
 
 
 def _exact_rerank(
@@ -1030,31 +568,12 @@ def _assign_cells(
     )
 
 
-def ivf_probe_index(
-    probes: DataFrame,
-    codebook: np.ndarray,
-    cells: DataFrame,
-    top_k: int = 10,
-    nprobe: int = 16,
-    round_digits: int = 4,
-) -> DataFrame:
-    """Query a prebuilt IVF index: assign probes to their top-`nprobe`
-    cells, cogroup against the stored inverted lists, per-cell matmul
-    top-k, global rank.  Output identical in shape/semantics to
-    ivf_topk — which is this function over a just-built index."""
-    probe = _assign_cells(probes, codebook, 0, nprobe).select(
-        F.explode("probe_cells").alias("cell"), "vec_id", "embedding"
-    )
-    return _cell_rank(probe, cells, top_k, round_digits)
-
-
 def _cell_topk_frames(
     probe_pdf: pd.DataFrame, db_pdf: pd.DataFrame, top_k: int,
     round_digits: int,
 ) -> pd.DataFrame:
     """One cell's exact matmul + per-probe partial top-k (self
-    excluded).  Shared by the cogrouped probe-index path and the
-    fused one-shot."""
+    excluded)."""
     empty = pd.DataFrame({"vec_id": [], "neighbor_id": [], "sim": []})
     if len(probe_pdf) == 0 or len(db_pdf) == 0:
         return empty
@@ -1090,20 +609,6 @@ def _topk_tail(partials: DataFrame, top_k: int) -> DataFrame:
         .filter(F.col("rank") <= top_k)
         .select("vec_id", "neighbor_id", "sim", "rank")
     )
-
-
-def _cell_rank(
-    probe: DataFrame, db: DataFrame, top_k: int, round_digits: int
-) -> DataFrame:
-    partials = (
-        probe.groupBy("cell")
-        .cogroup(db.groupBy("cell"))
-        .applyInPandas(
-            lambda l, r: _cell_topk_frames(l, r, top_k, round_digits),
-            schema="vec_id long, neighbor_id long, sim double",
-        )
-    )
-    return _topk_tail(partials, top_k)
 
 
 def ivf_topk(

@@ -108,8 +108,7 @@ def frames_from_signatures(sigs: DataFrame) -> DataFrame:
 
 def undecoded_clips(frames: DataFrame) -> DataFrame:
     """The quarantined clips (decode failed — marker rows).  Bounded
-    by the failure count; callers surface it in manifests beside
-    dropped_stop_hashes."""
+    by the failure count."""
     return frames.filter(~F.col("decode_ok")).select("clip_id")
 
 

@@ -141,7 +141,7 @@ def oversize_groups(
     """The groups `medoid_repair` refused (more distinct vals than
     variant_cap — a hot key, e.g. one checksum-colliding blob with
     thousands of scraped captions): (key, n_rows, n_variants), so the
-    drop is COUNTED in the job manifest rather than silent."""
+    drop can be counted rather than silent."""
     g1 = df.groupBy(key_col, val_col).agg(F.count("*").alias("c"))
     return (
         g1.groupBy(key_col)

@@ -63,22 +63,6 @@ def source_minhash_sketch(
     return hashed.groupBy("source", "lane").agg(F.min("h").alias("sig"))
 
 
-def merge_sketches(*sketches: DataFrame) -> DataFrame:
-    """Union per-batch (source, lane, sig) sketches into the corpus
-    sketch: min is associative/commutative/idempotent, so sketching
-    each ingest batch separately and folding with a lane-wise min is
-    EXACTLY the sketch of the union — the LSM-style incremental
-    maintenance story (same contract as operators.ann.append_ivf_index:
-    append equals rebuild, and replaying a batch is a no-op).  A
-    nightly overlap report therefore costs one bounded merge of
-    (sources x k)-row tables, never a corpus re-scan."""
-    it = iter(sketches)
-    acc = next(it)
-    for s in it:
-        acc = acc.unionByName(s)
-    return acc.groupBy("source", "lane").agg(F.min("sig").alias("sig"))
-
-
 def sketch_jaccard(sketch: DataFrame, k: int = 64) -> DataFrame:
     """(source, lane, sig) -> (src_a, src_b, agree_lanes, jacc_est) for
     every unordered source pair.  agree_lanes counts lanes whose min
@@ -168,23 +152,6 @@ def hll_registers(
     )
 
 
-def merge_hll_registers(*regs: DataFrame) -> DataFrame:
-    """Fold per-batch register tables into the corpus registers: max
-    is associative/commutative/idempotent, so sketching each ingest
-    batch separately and merging equals the sketch of the union —
-    the same LSM append==rebuild contract as merge_sketches above
-    (and replaying a batch is a no-op).  A running distinct-count
-    dashboard costs one bounded merge of <=(groups x 256)-row tables,
-    never a re-scan."""
-    it = iter(regs)
-    acc = next(it).select("g", "b", "mr")
-    for r in it:
-        # store-persisted register tables carry a batch_id column;
-        # project down so any mix of fresh and stored inputs unions
-        acc = acc.unionByName(r.select("g", "b", "mr"))
-    return acc.groupBy("g", "b").agg(F.max("mr").alias("mr"))
-
-
 def hll_estimate(regs: DataFrame) -> DataFrame:
     """Registers -> (g, hll_estimate): harmonic-mean HLL with the
     STANDARD small-range switch (Flajolet et al. 2007 fig. 3): the raw
@@ -269,18 +236,6 @@ def bloom_bits(corpus: DataFrame, text_col: str = "t") -> DataFrame:
     partial-agg distinct; the shuffle carries at most
     BLOOM_LANES * 16^BLOOM_HEX_W rows, never texts."""
     return _bloom_keys(corpus, text_col, []).distinct()
-
-
-def merge_bloom(*bits: DataFrame) -> DataFrame:
-    """Union per-batch occupied-bucket sets into the corpus sketch:
-    set union is associative/commutative/idempotent, so sketching each
-    ingest batch separately and folding equals the sketch of the union
-    (append == rebuild; replaying a batch is a no-op)."""
-    it = iter(bits)
-    acc = next(it).select("lane", "bkt")
-    for b in it:
-        acc = acc.unionByName(b.select("lane", "bkt"))
-    return acc.distinct()
 
 
 def bloom_probe(
@@ -377,17 +332,6 @@ def cms_counters(term_census: DataFrame) -> DataFrame:
         .groupBy("lane", "bkt")
         .agg(F.sum("c").alias("bc"))
     )
-
-
-def merge_cms(*sketches: DataFrame) -> DataFrame:
-    """Fold per-batch counter tables: (lane, bkt) SUM — linear, so
-    sketching batches separately and merging equals sketching the
-    union (append == rebuild; the CMS is a linear sketch)."""
-    it = iter(sketches)
-    acc = next(it).select("lane", "bkt", "bc")
-    for s in it:
-        acc = acc.unionByName(s.select("lane", "bkt", "bc"))
-    return acc.groupBy("lane", "bkt").agg(F.sum("bc").alias("bc"))
 
 
 def cms_estimate(counters: DataFrame, probes: DataFrame,

@@ -389,10 +389,3 @@ def embedding_contamination_hits(
     return scored.select(
         "vec_id", "best_eval_id", round_dd("raw_sim", 4).alias("sim")
     ).filter(F.col("sim") >= threshold)
-
-
-def decontaminated(train: DataFrame, eval_docs: DataFrame, n: int = 8) -> DataFrame:
-    """The clean corpus: train rows minus contamination_hits (left
-    anti on doc_id — the hits side is bounded, so this broadcasts)."""
-    hits = contamination_hits(train, eval_docs, n).select("doc_id")
-    return train.join(F.broadcast(hits), "doc_id", "left_anti")

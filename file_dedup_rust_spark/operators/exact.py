@@ -145,16 +145,3 @@ def reorder_invariant_key(text_col):
     whole-stage codegen, zero Python, and the groupBy downstream
     shuffles a 32-byte digest, never the text."""
     return F.md5(F.array_join(F.array_sort(F.split(text_col, " ")), " "))
-
-
-def exact_dup_groups(signatures: DataFrame) -> DataFrame:
-    """sha256 -> sorted member list, only groups with >1 member
-    (the user-facing `DuplicateGroup` view, client/src/app/type.ts:7-10)."""
-    return (
-        signatures.groupBy("sha256")
-        .agg(
-            F.sort_array(F.collect_list("clip_id")).alias("members"),
-            F.count("*").alias("n"),
-        )
-        .filter(F.col("n") > 1)
-    )

@@ -33,8 +33,8 @@ def verify_minhash(pairs: DataFrame, signatures: DataFrame, cfg: DedupConfig) ->
     """pairs(a,b) -> (a, b, kind='transcript', sim) with sim =
     fraction of agreeing MinHash lanes, filtered at jaccard_threshold.
 
-    The estimator (lane agreement) matches the numpy oracle's
-    signature_jaccard bit-for-bit."""
+    The estimator (lane agreement) matches the numpy oracle
+    (oracle.py) bit-for-bit."""
     joined = _attach(pairs, signatures, ["minhash"])
     agree = F.size(
         F.filter(

@@ -387,16 +387,15 @@ def run_pipeline(
             return None
         # stop-hash drop accounting (manifest parity with the LSH
         # dropped_buckets stage — no silent truncation)
-        if not (resume and io.is_committed("ac_dropped_hashes", fp_ac)):
-            from file_dedup_rust_spark.operators.audio_containment import (
-                dropped_stop_hashes,
-            )
+        from file_dedup_rust_spark.operators.audio_containment import (
+            dropped_stop_hashes,
+        )
 
-            _, r = io.stage(
-                "ac_dropped_hashes", fp_ac,
-                lambda: dropped_stop_hashes(frames, cfg=cfg), resume=resume,
-            )
-            stages.append(r)
+        _, r = io.stage(
+            "ac_dropped_hashes", fp_ac,
+            lambda: dropped_stop_hashes(frames, cfg=cfg), resume=resume,
+        )
+        stages.append(r)
         frames.unpersist()
         edges = edges.unionByName(ac_edges)
 
@@ -422,13 +421,12 @@ def run_pipeline(
         if done("sp_edges"):
             sp_rows.unpersist()
             return None
-        if not (resume and io.is_committed("sp_dropped_buckets", fp_sp)):
-            _, r = io.stage(
-                "sp_dropped_buckets", fp_sp,
-                lambda: speed_ladder_dropped_buckets(sp_rows, cfg),
-                resume=resume,
-            )
-            stages.append(r)
+        _, r = io.stage(
+            "sp_dropped_buckets", fp_sp,
+            lambda: speed_ladder_dropped_buckets(sp_rows, cfg),
+            resume=resume,
+        )
+        stages.append(r)
         sp_rows.unpersist()
         edges = edges.unionByName(
             sp_edges_df.select(
@@ -438,8 +436,8 @@ def run_pipeline(
 
     # dropped-bucket accounting (manifest metrics; SURVEY.md 7.3.2) —
     # reuses the persisted rep tables from the edges stage above
-    if not (resume and io.is_committed("dropped_buckets", fp)):
-        dropped = (
+    def build_dropped() -> DataFrame:
+        return (
             C.dropped_buckets(C.explode_keys(treps, "mh_bands"), cfg.band_cap)
             .withColumn("path", F.lit("minhash"))
             .unionByName(
@@ -453,11 +451,12 @@ def run_pipeline(
                 ).withColumn("path", F.lit("winnow"))
             )
         )
-        _, r = io.stage(
-            "dropped_buckets", fp, lambda: dropped, parents=["signatures"],
-            resume=resume,
-        )
-        stages.append(r)
+
+    _, r = io.stage(
+        "dropped_buckets", fp, build_dropped, parents=["signatures"],
+        resume=resume,
+    )
+    stages.append(r)
     treps.unpersist()
     areps.unpersist()
 

@@ -23,9 +23,6 @@ Two stateful surfaces are provided:
   cluster assignment keyed by sha256; state = first clip_id seen for
   the hash (the reference's create-or-join cluster step,
   deduplication_service.rs:374-433, made deterministic).
-
-Watermarked event-time aggregation (late data) is in
-`windowed_ingest_stats`.
 """
 
 from __future__ import annotations
@@ -996,310 +993,6 @@ def incremental_near_dedup(
     return writer.start()
 
 
-def incremental_ivf_neardup(
-    spark: SparkSession,
-    landing_dir: str,
-    store_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    codebook,
-    threshold: float = 0.9,
-    top_k: int = 10,
-    cells_m: int = 8,
-    available_now: bool = True,
-    compact_every: int = 16,
-):
-    """Streaming near-dup detection for the EMBEDDING modality through
-    the persistent IVF index — the reference's store-then-search loop
-    (S5 embed->index, J2 k-NN probe; deduplication_service.rs:256-372)
-    in streaming form, completing the sha256+SimHash probes of
-    `incremental_near_dedup` with the third signature family.
-
-    `codebook` is the prebuilt IVF codebook (operators.ann
-    train_codebook / build_ivf_index — the index definition exists
-    before workers probe it, like the reference's OpenSearch index).
-    Each micro-batch: assign the batch's vectors to their IVF cells
-    (one Arrow pass against the broadcast codebook), probe them
-    against the accumulated cell store PLUS the batch's own rows
-    (within-batch dups), emit pairs with cosine >= threshold, then
-    append the batch's cell rows to the store (idempotent
-    batch_id partitions + compaction, same store layer as the other
-    streams).  With cells_m used for both assignment and probing the
-    cell-coincidence condition is symmetric, so the drained match set
-    equals the batch `ivf_topk(assign_m=nprobe=cells_m)` pairs above
-    threshold regardless of arrival order — PROVIDED each probe has
-    fewer than `top_k` neighbors above threshold (ADVICE r3): each
-    drain truncates to top-k against the store as of that drain, so a
-    probe with more than top_k above-threshold neighbors can keep
-    early matches a full-corpus top-k would evict.  Dense dup clusters
-    (> top_k members) should raise top_k or treat the union as
-    threshold-pairs semantics (tests/test_streaming.py pins the parity
-    under the precondition)."""
-    import numpy as np
-
-    from file_dedup_rust_spark.operators.ann import _assign_cells, _cell_rank
-
-    codebook = np.asarray(codebook, dtype=np.float64)
-    emb = (
-        spark.readStream.schema("vec_id long, embedding array<double>")
-        .option("maxFilesPerTrigger", 16)
-        .parquet(landing_dir)
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        b = batch_df.persist()
-        try:
-            spark_l = b.sparkSession
-            assigned = _assign_cells(b, codebook, cells_m, cells_m).persist()
-            db_b = assigned.select(
-                F.explode("db_cells").alias("cell"), "vec_id", "embedding"
-            )
-            probe_b = assigned.select(
-                F.explode("probe_cells").alias("cell"), "vec_id", "embedding"
-            )
-            store = read_store(spark_l, store_dir)
-            db = db_b if store is None else db_b.unionByName(store)
-            matches = (
-                _cell_rank(probe_b, db, top_k, 4)
-                .filter(F.col("sim") >= threshold)
-                .select("vec_id", "neighbor_id", "sim")
-            )
-            store_write(matches, out_dir, batch_id)
-            store_write(db_b, store_dir, batch_id)
-            if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-                compact_store(spark_l, store_dir, int(batch_id) - 1)
-            assigned.unpersist()
-        finally:
-            b.unpersist()
-
-    writer = (
-        emb.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def streaming_decontam(
-    spark: SparkSession,
-    landing_dir: str,
-    eval_docs: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    n: int = 8,
-    available_now: bool = True,
-):
-    """Flag contaminated clips AT INGEST: each micro-batch's
-    transcript word-n-grams join against the STATIC eval gram set
-    (operators.decontaminate semantics); hits land idempotently under
-    batch_id partitions.
-
-    Unlike the dedup probes there is no accumulated store — the eval
-    side is fixed, so the probe is stateless per batch and
-    streaming-vs-batch parity is EXACT under any arrival order or
-    batch split (pinned in tests/test_streaming.py against
-    contamination_hits over the whole landing set).  The eval gram
-    table is computed once and cached: each micro-batch re-ships a
-    broadcast BUILT from that cache (foreachBatch plans per batch —
-    the cache saves the gram recompute, not the per-batch ship).  The
-    cached DataFrame is exposed as `query.eval_grams`; a long-running
-    service should `query.eval_grams.unpersist()` after stopping the
-    stream, or the cache lives until the session ends.
-    """
-    from file_dedup_rust_spark.operators.decontaminate import word_ngrams
-
-    # one row per gram with the eval-id set — the same hot-gram
-    # hardening as the batch operator (decontaminate.py): a gram
-    # shared by k eval docs must not multiply batch rows k-fold
-    eg = (
-        word_ngrams(eval_docs, n)
-        .groupBy("g")
-        .agg(F.collect_set("doc_id").alias("eval_ids"))
-        .persist()
-    )
-    eg.count()  # materialize once, before the first micro-batch
-
-    clips = read_clip_stream(spark, landing_dir)
-    docs = clips.select(
-        "clip_id",
-        F.lower(F.coalesce("transcript", F.lit(""))).alias("t"),
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        tg = word_ngrams(
-            batch_df.select(F.col("clip_id").alias("doc_id"), "t"), n
-        )
-        hits = (
-            tg.join(F.broadcast(eg), "g")
-            .groupBy("doc_id")
-            .agg(
-                F.count_distinct("g").alias("n_gram_hits"),
-                F.size(
-                    F.array_distinct(F.flatten(F.collect_list("eval_ids")))
-                ).cast("long").alias("n_eval_docs"),
-            )
-            .withColumnRenamed("doc_id", "clip_id")
-        )
-        store_write(hits, out_dir, batch_id)
-
-    writer = (
-        docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    query = writer.start()
-    query.eval_grams = eg  # cleanup handle (see docstring)
-    return query
-
-
-def streaming_hll_registers(
-    spark: SparkSession,
-    landing_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    group_col: str = "codec",
-    available_now: bool = True,
-):
-    """Running distinct-TRANSCRIPT cardinality per group AT INGEST —
-    the live "how much unique material arrived" dashboard, maintained
-    as HLL register deltas (operators.corpus_sketch) instead of an
-    accumulated distinct-value store.
-
-    Each micro-batch writes ITS OWN register table (<= groups x 256
-    rows per batch) under a batch_id partition via the idempotent
-    store; the current corpus registers are merge_hll_registers over
-    the store (register max is associative/commutative/idempotent, so
-    arrival order, batch splits, AND replays are all invisible —
-    streaming-vs-batch parity is BIT-EXACT, pinned in
-    tests/test_streaming.py).  Nothing per-value is ever retained:
-    this probe's state is O(groups), where every dedup store above is
-    O(distinct values) — the sketch trade the quality dashboards want
-    at 10^12 clips."""
-    clips = read_clip_stream(spark, landing_dir)
-    docs = clips.select(
-        F.col(group_col),
-        F.lower(F.coalesce("transcript", F.lit(""))).alias("t"),
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from file_dedup_rust_spark.operators.corpus_sketch import (
-            hll_registers,
-        )
-
-        store_write(hll_registers(batch_df, group_col, "t"), out_dir, batch_id)
-
-    writer = (
-        docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def streaming_bloom_bits(
-    spark: SparkSession,
-    landing_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-):
-    """Ingest-time Bloom prefilter state: per micro-batch occupied-
-    bucket deltas of the TRANSCRIPT Bloom sketch
-    (operators.corpus_sketch.bloom_bits — 4 md5 lanes x 4096 hex
-    buckets).  Each batch writes ITS OWN distinct (lane, bkt) set via
-    the idempotent store; the current corpus sketch is merge_bloom
-    over the store (set union is associative/commutative/idempotent,
-    so arrival order, batch splits, AND replays are invisible —
-    streaming-vs-batch parity is BIT-EXACT, pinned in
-    tests/test_streaming.py).
-
-    Why next to the exact fingerprint stores above: those are
-    O(distinct values) — the authoritative tier.  This sketch is
-    O(lanes x 16^w) REGARDLESS of corpus size, and guarantees zero
-    false negatives, so an ingest worker can route bloom-miss clips
-    straight to "definitely new" and reserve the exact store probe
-    (and its state) for the maybe-dup trickle — the cheap-tier-first
-    ladder applied to streaming state itself."""
-    clips = read_clip_stream(spark, landing_dir)
-    docs = clips.select(
-        F.lower(F.coalesce("transcript", F.lit(""))).alias("t")
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from file_dedup_rust_spark.operators.corpus_sketch import bloom_bits
-
-        store_write(bloom_bits(batch_df, "t"), out_dir, batch_id)
-
-    writer = (
-        docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def streaming_cms_counters(
-    spark: SparkSession,
-    landing_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-):
-    """Ingest-time Count-Min frequency sketch: per micro-batch counter
-    DELTAS of the transcript-token CMS
-    (operators.corpus_sketch.cms_counters — 4 md5 lanes x 4096
-    counters).  Each batch censuses its own tokens (map-side
-    combining, vocab-bounded) and writes its counter table via the
-    idempotent store; the current corpus sketch is merge_cms over the
-    store.  The CMS is a LINEAR sketch — counter addition is
-    associative/commutative, so arrival order and batch splits are
-    invisible (streaming-vs-batch parity is BIT-EXACT, pinned in
-    tests/test_streaming.py); replay safety comes from the store's
-    dynamic batch_id partition overwrite, NOT from the merge (sums,
-    unlike the Bloom/HLL set/max folds, would double-count a replayed
-    delta — the store contract absorbs exactly that).
-
-    Why next to the Bloom/HLL stores above: Bloom answers "seen at
-    all?", HLL answers "how many distinct?", and this answers "how
-    HOT is this term/key?" — the skew early-warning a 10^12-clip
-    ingest wants BEFORE a hot band/bucket reaches the dedup caps, at
-    O(lanes x width) state regardless of corpus size, with the CMS
-    one-sided guarantee (never undercounts a key you ask about)."""
-    clips = read_clip_stream(spark, landing_dir)
-    docs = clips.select(
-        F.lower(F.coalesce("transcript", F.lit(""))).alias("t")
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from file_dedup_rust_spark.operators.corpus_sketch import (
-            cms_counters,
-        )
-
-        census = (
-            batch_df.select(F.explode(F.split("t", " ")).alias("w"))
-            .groupBy("w")
-            .agg(F.count("*").alias("c"))
-        )
-        store_write(cms_counters(census), out_dir, batch_id)
-
-    writer = (
-        docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 _ASSIGN_STATE_SCHEMA = "rep string"
 _ASSIGN_OUT_SCHEMA = "clip_id string, sha256 string, cluster_rep string"
 
@@ -1350,163 +1043,6 @@ def streaming_cluster_assign(
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def windowed_ingest_stats(
-    spark: SparkSession,
-    landing_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    window: str = "1 minute",
-    watermark: str = "2 minutes",
-    available_now: bool = True,
-    event_time_col: str | None = "event_ts",
-):
-    """Watermarked tumbling-window ingest metrics by codec (the A8
-    counters as an event-time stream).
-
-    Event time is REAL by default: the landing files carry an
-    `event_ts` timestamp column (capture time upstream of the engine)
-    and the watermark advances on the DATA's clock, so out-of-order
-    rows older than `watermark` are genuinely dropped by state cleanup
-    (tests/test_streaming.py feeds late rows across drains and pins
-    the drop + batch-window parity).  Passing event_time_col=None
-    falls back to processing-time stamping (current_timestamp) for
-    landing data without a capture clock — that mode never exercises
-    the late path by construction (the round-2 default; VERDICT r2
-    item 4).
-
-    Fails fast if the landing data lacks `event_time_col` (ADVICE r3):
-    readStream with an explicit schema would otherwise read the column
-    as all-null and every row would vanish from every window silently
-    (null event time never enters a window)."""
-    if event_time_col:
-        try:
-            landing_fields = set(
-                spark.read.parquet(landing_dir).schema.fieldNames()
-            )
-        except Exception:
-            landing_fields = None  # empty landing dir — nothing to check yet
-        if landing_fields is not None and event_time_col not in landing_fields:
-            raise ValueError(
-                f"windowed_ingest_stats: landing data at {landing_dir!r} has "
-                f"no {event_time_col!r} column — pass event_time_col=None "
-                "for processing-time windows, or name an existing timestamp "
-                f"column (found: {sorted(landing_fields)})"
-            )
-        schema = CLIP_SCHEMA + f", {event_time_col} timestamp"
-        clips = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 16)
-            .parquet(landing_dir)
-            .withColumnRenamed(event_time_col, "ingest_ts")
-        )
-    else:
-        clips = read_clip_stream(spark, landing_dir).withColumn(
-            "ingest_ts", F.current_timestamp()
-        )
-    agg = (
-        clips.withWatermark("ingest_ts", watermark)
-        .groupBy(F.window("ingest_ts", window).alias("win"), "codec")
-        .agg(
-            F.count("*").alias("n_clips"),
-            F.sum("dur_ms").alias("total_dur_ms"),
-        )
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            "codec", "n_clips", "total_dur_ms",
-        )
-    )
-    writer = (
-        agg.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def streaming_speed_probe(
-    spark: SparkSession,
-    landing_dir: str,
-    store_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    cfg: DedupConfig | None = None,
-    available_now: bool = True,
-    compact_every: int = 16,
-):
-    """Ingest-time twin of the opt-in speed-ladder tier
-    (operators/speed_ladder.py): a re-upload resampled 0.95-1.05x
-    (metadata unchanged) matches AT INGEST instead of at the next
-    batch run, in either arrival order.
-
-    Each micro-batch computes the full hypothesis table for the
-    arriving clips (identity + one signature per grid factor — its own
-    decode pass; the tier is opt-in and the batch side is small), then
-    probes three ways with the SAME operator:
-
-      * within-batch:       speed_edges(batch_rows)
-      * batch hyp vs store: speed_edges(batch_rows, ident_rows=store)
-      * store hyp vs batch: speed_edges(store_rows, ident_rows=batch)
-
-    The store accumulates ALL ladder rows (identity + hypotheses,
-    (1 + |sp_grid|) x clips rows — the price of covering both role
-    assignments, which is what makes the drained pair set equal the
-    batch operator's regardless of which side of a sped pair arrived
-    first; pinned in tests/test_speed_ladder.py).  Hot keys are
-    df-capped per distinct clip on BOTH posting sides inside
-    speed_edges (counted via speed_ladder_dropped_buckets on the
-    store).  Matches and store rows land idempotently under batch_id
-    partitions with pointer-committed compaction, the module's
-    standard store layer."""
-    from file_dedup_rust_spark.operators.speed_ladder import (
-        speed_edges,
-        speed_hypothesis_rows,
-    )
-
-    cfg = cfg or DedupConfig()
-    clips = read_clip_stream(spark, landing_dir)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark_l = batch_df.sparkSession
-        rows = speed_hypothesis_rows(batch_df, cfg).persist()
-        try:
-            matches = speed_edges(rows, cfg)
-            store = read_store(spark_l, store_dir)
-            if store is not None:
-                matches = matches.unionByName(
-                    speed_edges(rows, cfg, ident_rows=store)
-                ).unionByName(speed_edges(store, cfg, ident_rows=rows))
-                matches = (
-                    matches.groupBy("a", "b")
-                    .agg(
-                        F.max(F.struct("sim", "speed_ratio")).alias("m")
-                    )
-                    .select(
-                        "a", "b",
-                        F.col("m.sim").alias("sim"),
-                        F.col("m.speed_ratio").alias("speed_ratio"),
-                    )
-                )
-            store_write(matches, out_dir, batch_id)
-            store_write(rows, store_dir, batch_id)
-            if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-                compact_store(spark_l, store_dir, int(batch_id) - 1)
-        finally:
-            rows.unpersist()
-
-    writer = (
-        clips.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
     )
     if available_now:
         writer = writer.trigger(availableNow=True)

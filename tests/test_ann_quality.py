@@ -14,9 +14,7 @@ ranking fail loudly.
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 
 def _recall(spark, sf_dir: str) -> tuple[float, int, int]:
@@ -43,72 +41,6 @@ def test_ivf_recall_vs_brute(spark, sf_dir):
     assert recall >= 0.9, f"IVF recall@10 vs brute = {recall:.3f} at {sf_dir}"
     # every IVF probe still returns a full (or capped) neighbour list
     assert n_rows >= 5 * n_probes
-
-
-def test_ivf_index_build_probe_and_resume(spark, tmp_path):
-    """Persistent-index surface (the reference's OpenSearch index
-    analog): build_ivf_index checkpoints codebook + inverted lists
-    through TableIO, ivf_probe_index over the stored index returns
-    exactly what the one-shot ivf_topk computes with the same codebook,
-    and a rebuild resumes from the manifest instead of recomputing."""
-    from file_dedup_rust_spark.operators import ann
-    from file_dedup_rust_spark.sources.table_io import TableIO
-
-    sf_dir = "/root/testdata/sf0.01"
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    io = TableIO(spark, str(tmp_path / "index"))
-    codebook, cells = ann.build_ivf_index(e, io)
-    via_index = {
-        (r.vec_id, r.neighbor_id, r.sim, r.rank)
-        for r in ann.ivf_probe_index(e, codebook, cells).collect()
-    }
-    direct = {
-        (r.vec_id, r.neighbor_id, r.sim, r.rank)
-        for r in ann.ivf_topk(e, codebook=codebook).collect()
-    }
-    assert via_index == direct and len(direct) > 0
-    # rebuild resumes from checkpoint (same params -> same fingerprint)
-    cb2, cells2 = ann.build_ivf_index(e, io)
-    assert (codebook == cb2).all()
-    assert io.manifest_entry("ivf_codebook")["status"] == "committed"
-    assert io.manifest_entry("ivf_cells")["row_count"] == cells2.count()
-
-
-@pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.01", "/root/testdata/sf0.1"])
-def test_ivf_pq_recall_and_compression(spark, sf_dir, tmp_path):
-    """PQ-compressed inverted lists (VERDICT r2 item 2): the cells
-    checkpoint must shrink by an order of magnitude (manifest byte
-    evidence: 8-byte codes replace 512-byte vectors) while ADC-scan +
-    exact re-rank holds recall@10 >= 0.9 vs brute force at both scale
-    factors — same gate as the uncompressed path."""
-    from file_dedup_rust_spark.entry import testdata_queries as Q
-    from file_dedup_rust_spark.operators import ann
-    from file_dedup_rust_spark.sources.table_io import TableIO
-
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    io = TableIO(spark, str(tmp_path / "idx"))
-    codebook, cells_full = ann.build_ivf_index(e, io, name="full")
-    cb2, pq, cells_pq = ann.build_ivf_pq_index(e, io, name="pq")
-    assert (codebook == cb2).all()  # same deterministic codebook
-
-    full_bytes = io.manifest_entry("full_cells")["bytes"]
-    pq_bytes = io.manifest_entry("pq_cells")["bytes"]
-    assert io.manifest_entry("pq_cells")["row_count"] == \
-        io.manifest_entry("full_cells")["row_count"]
-    assert pq_bytes * 5 < full_bytes, (pq_bytes, full_bytes)
-
-    got = ann.ivf_pq_probe_index(e, cb2, pq, cells_pq, e)
-    brute = {
-        (r["vec_id"], r["neighbor_id"])
-        for r in Q.q_knn_topk(spark, sf_dir).collect()
-    }
-    approx = {(r["vec_id"], r["neighbor_id"]) for r in got.collect()}
-    recall = len(brute & approx) / len(brute)
-    assert recall >= 0.9, f"PQ recall@10 = {recall:.3f} at {sf_dir}"
 
 
 def test_ivf_clustered_embeddings_hold_recall_at_low_nprobe(spark):
@@ -177,159 +109,3 @@ def test_ivf_planted_clustered_is_exact(spark, sf_dir):
             assert got == exact, fn.__name__
     finally:
         corpus.unpersist()
-
-
-def test_kmeans_parallel_deterministic(spark):
-    """k-means|| is replayable: hash-uniform Bernoulli draws + seeded
-    local finish -> bit-identical codebooks across runs."""
-    from file_dedup_rust_spark import datagen
-    from file_dedup_rust_spark.operators.ann import kmeans_parallel_codebook
-
-    e = datagen.clustered_embeddings(spark, 2000).select(
-        "vec_id", "embedding"
-    ).persist()
-    try:
-        a = kmeans_parallel_codebook(e, 16, rounds=3)
-        b = kmeans_parallel_codebook(e, 16, rounds=3)
-        assert a.shape == (16, a.shape[1])
-        assert (a == b).all()
-        assert np.allclose(np.linalg.norm(a, axis=1), 1.0)
-    finally:
-        e.unpersist()
-
-
-def test_kmeans_parallel_finds_rare_far_mode(spark):
-    """The reason k-means|| exists: a small far-out mode (1% of rows)
-    attracts candidates BECAUSE it is far (d2-proportional sampling),
-    so a centroid lands on it.  Planted: 3960 rows on one direction,
-    40 on an orthogonal one."""
-    import pandas as pd
-
-    from file_dedup_rust_spark.operators.ann import kmeans_parallel_codebook
-
-    rng = np.random.default_rng(5)
-    d = 32
-    main_dir = np.zeros(d); main_dir[0] = 1.0
-    rare_dir = np.zeros(d); rare_dir[1] = 1.0
-    rows = []
-    for i in range(3960):
-        v = main_dir + 0.05 * rng.standard_normal(d)
-        rows.append((i, (v / np.linalg.norm(v)).tolist()))
-    for i in range(40):
-        v = rare_dir + 0.05 * rng.standard_normal(d)
-        rows.append((10_000 + i, (v / np.linalg.norm(v)).tolist()))
-    e = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["vec_id", "embedding"])
-    )
-    cb = kmeans_parallel_codebook(e, 8, rounds=3)
-    assert (cb @ rare_dir).max() >= 0.95, "no centroid near the rare mode"
-    assert (cb @ main_dir).max() >= 0.95
-
-
-def test_ivf_kmeans_parallel_init_holds_clustered_recall(spark):
-    """build path parity: IVF probing with a k-means|| codebook holds
-    the same clustered-geometry recall gate as the sampled trainer
-    (assign_m=4 / nprobe=4 >= 0.97)."""
-    from file_dedup_rust_spark import datagen
-    from file_dedup_rust_spark.operators.ann import (
-        default_k,
-        ivf_topk,
-        kmeans_parallel_codebook,
-        knn_topk_blocked,
-    )
-
-    n = 4000
-    e = datagen.clustered_embeddings(spark, n).select(
-        "vec_id", "embedding"
-    ).persist()
-    try:
-        brute = {
-            (r.vec_id, r.neighbor_id)
-            for r in knn_topk_blocked(e, top_k=10).collect()
-        }
-        cb = kmeans_parallel_codebook(e, default_k(n))
-        ivf = {
-            (r.vec_id, r.neighbor_id)
-            for r in ivf_topk(
-                e, top_k=10, assign_m=4, nprobe=4, codebook=cb
-            ).collect()
-        }
-        recall = len(brute & ivf) / len(brute)
-        assert recall >= 0.97, f"kmeans|| IVF recall@10 = {recall:.3f}"
-    finally:
-        e.unpersist()
-
-
-def test_ivf_index_init_in_fingerprint(spark, tmp_path):
-    """init participates in the stage fingerprint: switching trainers
-    on the same checkpoint dir rebuilds instead of resuming a stale
-    codebook (the ADVICE-r4 schema-token convention)."""
-    from file_dedup_rust_spark.operators import ann
-    from file_dedup_rust_spark.sources.table_io import TableIO
-    from file_dedup_rust_spark import datagen
-
-    e = datagen.clustered_embeddings(spark, 1500).select(
-        "vec_id", "embedding"
-    )
-    io = TableIO(spark, str(tmp_path / "idx"))
-    cb_s, _ = ann.build_ivf_index(e, io, k_cells=12)
-    cb_k, _ = ann.build_ivf_index(e, io, k_cells=12, init="kmeans||")
-    assert cb_s.shape == cb_k.shape
-    assert not (cb_s == cb_k).all(), "kmeans|| resumed the sample codebook"
-    # same init again -> resume, bit-identical
-    cb_k2, _ = ann.build_ivf_index(e, io, k_cells=12, init="kmeans||")
-    assert (cb_k == cb_k2).all()
-
-
-def test_ivf_append_equals_rebuild_and_is_idempotent(spark, tmp_path):
-    """Incremental index maintenance: append_ivf_index assigns ONLY
-    the new batch with the persisted codebook; probing base+delta via
-    read_ivf_cells returns exactly what a full rebuild at the same
-    codebook returns, a replayed batch_id resumes instead of
-    duplicating rows, and the base cells manifest is untouched."""
-    from file_dedup_rust_spark.operators import ann
-    from file_dedup_rust_spark.sources.table_io import TableIO
-
-    sf_dir = "/root/testdata/sf0.01"
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    base = e.filter(F.col("vec_id") % 5 != 0)
-    batch = e.filter(F.col("vec_id") % 5 == 0)
-
-    io = TableIO(spark, str(tmp_path / "idx"))
-    codebook, _ = ann.build_ivf_index(base, io)
-    base_entry = dict(io.manifest_entry("ivf_cells"))
-
-    cb2, delta = ann.append_ivf_index(batch, io, batch_id="b001")
-    assert (codebook == cb2).all()
-    assert delta.count() > 0
-    # base lists untouched — no full-corpus rewrite on append
-    assert io.manifest_entry("ivf_cells") == base_entry
-
-    live = ann.read_ivf_cells(io)
-    probes = e.limit(40)
-    via_append = {
-        (r.vec_id, r.neighbor_id, r.sim, r.rank)
-        for r in ann.ivf_probe_index(probes, codebook, live).collect()
-    }
-    rebuilt = ann._assign_cells(e, codebook, 8, 8).select(
-        F.explode("db_cells").alias("cell"), "vec_id", "embedding"
-    )
-    via_rebuild = {
-        (r.vec_id, r.neighbor_id, r.sim, r.rank)
-        for r in ann.ivf_probe_index(probes, codebook, rebuilt).collect()
-    }
-    assert via_append == via_rebuild and len(via_rebuild) > 0
-
-    # replayed ingest resumes the committed delta (idempotent)
-    n_live = live.count()
-    _, delta2 = ann.append_ivf_index(batch, io, batch_id="b001")
-    assert ann.read_ivf_cells(io).count() == n_live
-    # a second batch stacks as another delta
-    _, _ = ann.append_ivf_index(
-        batch.withColumn("vec_id", F.col("vec_id") + 1_000_000),
-        io,
-        batch_id="b002",
-    )
-    assert ann.read_ivf_cells(io).count() == n_live + delta.count()

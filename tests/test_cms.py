@@ -1,19 +1,14 @@
 """Count-Min sketch properties (operators/corpus_sketch.py): the
 one-sided error guarantee, point-query exactness in the no-collision
-regime, linearity (merge of per-batch sketches == sketch of the
-union, the append==rebuild contract shared with the HLL and Bloom
-stores), and bounded counter-table size."""
+regime, and bounded counter-table size."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 from file_dedup_rust_spark.operators.corpus_sketch import (
     CMS_HEX_W,
     CMS_LANES,
     cms_counters,
     cms_estimate,
-    merge_cms,
 )
 
 
@@ -73,20 +68,6 @@ def test_overcount_is_shared_bucket_mass(spark):
             for lane in range(CMS_LANES)
         )
         assert got[w] == want
-
-
-def test_merge_equals_rebuild(spark):
-    """CMS is a linear sketch: counters(A) + counters(B) ==
-    counters(A ∪ B), row for row."""
-    a = _census(spark, [(f"t{i}", 2) for i in range(30)])
-    b = _census(spark, [(f"t{i}", 3) for i in range(15, 45)])
-    merged = merge_cms(cms_counters(a), cms_counters(b))
-    rebuilt = cms_counters(
-        a.unionByName(b).groupBy("w").agg(F.sum("c").alias("c"))
-    )
-    m = {(r["lane"], r["bkt"]): r["bc"] for r in merged.collect()}
-    r_ = {(r["lane"], r["bkt"]): r["bc"] for r in rebuilt.collect()}
-    assert m == r_
 
 
 def test_counter_table_is_bounded(spark):

@@ -49,6 +49,8 @@ def test_kill_and_resume(spark, cfg, clips_df, tmp_path):
     a1 = res.assignments.toPandas().sort_values("clip_id").reset_index(drop=True)
     res2 = run_pipeline(spark, clips_df, cfg, ckpt)
     assert all(s.skipped for s in res2.stages)
+    # the resumed run record lists every stage the computing run listed
+    assert [s.name for s in res2.stages] == [s.name for s in res.stages]
     a2 = res2.assignments.toPandas().sort_values("clip_id").reset_index(drop=True)
     assert a1.equals(a2)
 

@@ -111,7 +111,7 @@ def test_semdedup_trained_centroid_path_agrees_at_equal_k(spark):
     """The production centroid path (VERDICT r4 item 7): on the
     clustered fixture with k = the true cluster count, the trained
     codebook (operators.ann.train_codebook — the same Lloyd trainer
-    whose output build_ivf_index persists) and the deterministic
+    `ivf_topk` uses) and the deterministic
     smallest-id seeds must agree on WHICH vectors get pruned almost
     everywhere — on this fixture vec_ids 0..k-1 land one per true
     cluster, so both coarse clusterings recover the same structure.

@@ -133,40 +133,6 @@ def test_source_sketch_estimates_controlled_overlap(spark):
     assert est[("A", "C")] <= 0.1 and est[("B", "C")] <= 0.1
 
 
-def test_sketch_merge_equals_rebuild_and_is_idempotent(spark):
-    """Incremental maintenance contract: sketching two ingest batches
-    separately and merging equals sketching their union in one pass,
-    and replaying a batch changes nothing (min is idempotent)."""
-    from file_dedup_rust_spark.operators.corpus_sketch import (
-        merge_sketches,
-        source_minhash_sketch,
-    )
-
-    b1 = spark.createDataFrame(
-        [("A", f"doc {i}") for i in range(60)]
-        + [("B", f"doc {i}") for i in range(30, 90)],
-        "source string, t string",
-    )
-    b2 = spark.createDataFrame(
-        [("A", f"doc {i}") for i in range(60, 120)]
-        + [("C", f"late {i}") for i in range(40)],
-        "source string, t string",
-    )
-    k = 16
-    merged = merge_sketches(
-        source_minhash_sketch(b1, k), source_minhash_sketch(b2, k)
-    )
-    rebuilt = source_minhash_sketch(b1.unionByName(b2), k)
-
-    def as_map(df):
-        return {(r["source"], r["lane"]): r["sig"] for r in df.collect()}
-
-    m, r = as_map(merged), as_map(rebuilt)
-    assert m == r
-    replayed = merge_sketches(merged, source_minhash_sketch(b2, k))
-    assert as_map(replayed) == m
-
-
 def test_embedding_decontam_empty_eval_set(emb_tables, spark):
     corpus, ev = emb_tables
     empty = ev.filter("vec_id < 0")
@@ -259,55 +225,6 @@ def test_hll_distinct_matches_python_and_is_accurate(spark):
         assert rel < 0.15, (g, rel)
 
 
-def test_hll_merge_append_equals_rebuild(spark):
-    """Register merge is the sketch of the union: sketching three
-    ingest batches separately and folding with merge_hll_registers
-    yields BIT-IDENTICAL registers (and estimate) to one rebuild over
-    the concatenation; replaying a batch is a no-op."""
-    from file_dedup_rust_spark.operators.corpus_sketch import (
-        hll_estimate,
-        hll_registers,
-        merge_hll_registers,
-    )
-
-    batches = [
-        [("a", f"x-{i}") for i in range(400)],
-        [("a", f"y-{i}") for i in range(300)] + [("b", f"z-{i}") for i in range(200)],
-        [("a", f"x-{i}") for i in range(100)],  # overlaps batch 1
-    ]
-    dfs = [
-        spark.createDataFrame(b, "source string, t string") for b in batches
-    ]
-    merged = merge_hll_registers(
-        *[hll_registers(d, "source", "t") for d in dfs]
-    )
-    rebuilt = hll_registers(
-        dfs[0].unionByName(dfs[1]).unionByName(dfs[2]), "source", "t"
-    )
-    as_set = lambda df: {(r["g"], r["b"], r["mr"]) for r in df.collect()}
-    assert as_set(merged) == as_set(rebuilt)
-    # replay idempotence
-    replay = merge_hll_registers(merged, hll_registers(dfs[2], "source", "t"))
-    assert as_set(replay) == as_set(rebuilt)
-    # store-persisted register tables carry batch_id — merging a mix
-    # of stored and fresh sketches must project, not raise
-    import pyspark.sql.functions as F2
-    stored = hll_registers(dfs[0], "source", "t").withColumn(
-        "batch_id", F2.lit(0)
-    )
-    mixed = merge_hll_registers(
-        stored,
-        hll_registers(dfs[1], "source", "t"),
-        hll_registers(dfs[2], "source", "t"),
-    )
-    assert as_set(mixed) == as_set(rebuilt)
-    est = {r["g"]: r["hll_estimate"] for r in hll_estimate(merged).collect()}
-    assert est == {
-        r["g"]: r["hll_estimate"] for r in hll_estimate(rebuilt).collect()
-    }
-    assert abs(est["a"] - 700) / 700 < 0.15 and abs(est["b"] - 200) / 200 < 0.15
-
-
 # ---------------------------------------------------------------------------
 # partitioned Bloom prefilter (operators/corpus_sketch.py)
 # ---------------------------------------------------------------------------
@@ -338,28 +255,6 @@ def test_bloom_zero_false_negatives_and_low_fp(spark):
     )
     fp = sum(r["bloom_hit"] for r in bloom_probe(bits, fresh, "id").collect())
     assert fp / 300 < 0.10
-
-
-def test_bloom_merge_equals_rebuild_and_is_idempotent(spark):
-    """Same LSM contract as the MinHash/HLL sketches: per-batch bloom
-    bits folded with merge_bloom equal the bits of the union, and
-    replaying a batch is a no-op (set union is idempotent)."""
-    from file_dedup_rust_spark.operators.corpus_sketch import (
-        bloom_bits,
-        merge_bloom,
-    )
-
-    b1 = spark.createDataFrame([(f"a {i}",) for i in range(80)], "t string")
-    b2 = spark.createDataFrame([(f"b {i}",) for i in range(80)], "t string")
-
-    def as_set(df):
-        return {(r["lane"], r["bkt"]) for r in df.collect()}
-
-    merged = merge_bloom(bloom_bits(b1), bloom_bits(b2))
-    rebuilt = bloom_bits(b1.unionByName(b2))
-    assert as_set(merged) == as_set(rebuilt)
-    replay = merge_bloom(merged, bloom_bits(b2))
-    assert as_set(replay) == as_set(rebuilt)
 
 
 def test_bloom_state_is_bounded(spark):

@@ -11,7 +11,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 from file_dedup_rust_spark.config import DedupConfig
@@ -135,62 +134,6 @@ def test_speed_ladder_quarantine_and_caps(spark):
     q = rows.filter(~F.col("decode_ok")).collect()
     assert [r["clip_id"] for r in q] == ["broken"]
     assert speed_ladder_dropped_buckets(rows, cfg).count() > 0
-
-
-def test_streaming_speed_probe_parity_both_arrival_orders(spark, tmp_path):
-    """The ingest-time probe drains the SAME pair set as the batch
-    operator over the full corpus, whichever side of a sped pair
-    arrived first (the store keeps hypothesis rows, so both role
-    assignments are covered)."""
-    import os
-
-    from file_dedup_rust_spark.operators.speed_ladder import (
-        speed_hypothesis_rows as shr,
-        speed_edges as se,
-    )
-    from file_dedup_rust_spark.streaming.incremental import (
-        read_store,
-        streaming_speed_probe,
-    )
-
-    cfg = DedupConfig()
-    corpus, want = _corpus(8)
-    full = spark.createDataFrame(corpus[CLIP_COLS])
-    batch_pairs = {
-        (r["a"], r["b"]) for r in se(shr(full, cfg), cfg).collect()
-    }
-    assert batch_pairs  # planted pairs exist
-
-    # split so half the sped copies arrive BEFORE their originals
-    originals = corpus[~corpus.clip_id.str.startswith("sp_")]
-    sped = corpus[corpus.clip_id.str.startswith("sp_")]
-    b1 = pd.concat([originals.iloc[:4], sped.iloc[4:]])   # orig-first half
-    b2 = pd.concat([originals.iloc[4:], sped.iloc[:4]])   # sped-first half
-    from file_dedup_rust_spark.datagen import CLIP_SCHEMA
-
-    def _land(pdf, sub):
-        spark.createDataFrame(
-            pdf[CLIP_COLS].to_dict("records"), CLIP_SCHEMA
-        ).coalesce(1).write.mode("overwrite").parquet(f"{landing}/{sub}")
-
-    landing = str(tmp_path / "landing")
-    os.makedirs(landing, exist_ok=True)
-    _land(b1, "batch=1")
-    q = streaming_speed_probe(
-        spark, landing, str(tmp_path / "store"), str(tmp_path / "out"),
-        str(tmp_path / "ck"), cfg,
-    )
-    q.awaitTermination(180)
-    _land(b2, "batch=2")
-    q2 = streaming_speed_probe(
-        spark, landing, str(tmp_path / "store"), str(tmp_path / "out"),
-        str(tmp_path / "ck"), cfg,
-    )
-    q2.awaitTermination(180)
-
-    drained = read_store(spark, str(tmp_path / "out"))
-    got = {(r["a"], r["b"]) for r in drained.collect()}
-    assert got == batch_pairs
 
 
 def test_pipeline_speed_ladder_tier_coclusters(spark, tmp_path):

@@ -1,5 +1,5 @@
-"""Structured Streaming surface: incremental dedup across micro-batches,
-stateful cluster assignment, watermarked windowed stats.
+"""Structured Streaming surface: incremental dedup across micro-batches
+and stateful cluster assignment.
 
 Streams run with trigger(availableNow=True) so each test drains the
 landing directory and terminates (the reference's drain-the-queue
@@ -14,10 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from file_dedup_rust_spark import datagen
-from file_dedup_rust_spark.streaming.incremental import (
-    streaming_cluster_assign,
-    windowed_ingest_stats,
-)
+from file_dedup_rust_spark.streaming.incremental import streaming_cluster_assign
 
 
 @pytest.fixture(scope="module")
@@ -98,24 +95,6 @@ def test_streaming_cluster_assign_stateful(spark, two_batches):
     # exact dup pairs share a representative
     for child, base in exact_children:
         assert rows[child] == rows[base]
-
-
-def test_windowed_ingest_stats_schema(spark, two_batches):
-    landing, root, _ = two_batches
-    out = str(root / "winstats")
-    ck = str(root / "ck-win")
-    q = windowed_ingest_stats(spark, landing, out, ck, window="10 seconds",
-                              watermark="10 seconds", event_time_col=None)
-    q.awaitTermination(120)
-    df = spark.read.parquet(out)
-    assert set(df.columns) == {
-        "window_start", "window_end", "codec", "n_clips", "total_dur_ms"
-    }
-    # append mode only emits windows closed by the watermark; with
-    # availableNow + processing-time windows that may be zero rows —
-    # the schema/plumbing is what this asserts. Run a second drop to
-    # close the first window if rows exist.
-    assert df.count() >= 0
 
 
 @pytest.fixture(scope="module")
@@ -423,143 +402,6 @@ def test_store_write_empty_batch_is_noop(spark, tmp_path):
     assert read_store(spark, store).count() == 5
 
 
-def test_event_time_watermark_drops_late_rows(spark, tmp_path):
-    """REAL event-time semantics (VERDICT r2 item 4): the watermark
-    advances on the data's event_ts, a row arriving after the watermark
-    passed its window is dropped, and the emitted windows match the
-    batch events_window_agg semantics (F.window groupBy) computed over
-    exactly the non-late rows."""
-    import datetime as dt
-
-    from file_dedup_rust_spark.streaming.incremental import (
-        windowed_ingest_stats,
-    )
-
-    landing = str(tmp_path / "landing")
-    out = str(tmp_path / "win")
-    ck = str(tmp_path / "ck")
-    t0 = dt.datetime(2026, 1, 1, 10, 0, 0)
-
-    def mk(rows):
-        return spark.createDataFrame(
-            [
-                (f"c{i}", b"", 8000, 100, codec, "t",
-                 t0 + dt.timedelta(seconds=s))
-                for i, (s, codec) in enumerate(rows)
-            ],
-            schema=datagen.CLIP_SCHEMA + ", event_ts timestamp",
-        )
-
-    # drop A: events at 10:00:10(x2, wav), 10:01:10, 10:04:50
-    mk([(10, "wav"), (15, "wav"), (70, "pcm_s16le"), (290, "wav")]).coalesce(
-        1
-    ).write.mode("append").parquet(landing)
-    q = windowed_ingest_stats(spark, landing, out, ck,
-                              window="1 minute", watermark="2 minutes")
-    q.awaitTermination(120)
-    # drop B: max event so far 10:04:50 -> watermark 10:02:50.
-    #   late row at 10:00:30 (window 10:00, already past watermark) -> DROPPED
-    #   row at 10:04:55 (window 10:04, still open)                  -> KEPT
-    #   sentinel at 11:00 pushes the watermark past every window     -> KEPT
-    mk([(30, "wav"), (295, "wav"), (3600, "pcm_s16le")]).coalesce(1).write.mode(
-        "append"
-    ).parquet(landing)
-    q = windowed_ingest_stats(spark, landing, out, ck,
-                              window="1 minute", watermark="2 minutes")
-    q.awaitTermination(120)
-    # drop C: nothing new except closing the sentinel's own window
-    mk([(3660 + 240, "wav")]).coalesce(1).write.mode("append").parquet(landing)
-    q = windowed_ingest_stats(spark, landing, out, ck,
-                              window="1 minute", watermark="2 minutes")
-    q.awaitTermination(120)
-
-    got = {
-        (r.window_start, r.codec): r.n_clips
-        for r in spark.read.parquet(out).collect()
-    }
-    w = lambda m: t0 + dt.timedelta(minutes=m)  # noqa: E731
-    # the 10:00 wav window counts ONLY drop A's two rows — the late
-    # 10:00:30 arrival is gone, not merged, not re-emitted
-    assert got[(w(0), "wav")] == 2
-    # the 10:04 window kept B's in-watermark addition
-    assert got[(w(4), "wav")] == 2
-    assert got[(w(1), "pcm_s16le")] == 1
-    # batch parity: batch F.window over the NON-LATE rows reproduces
-    # every emitted closed window (same events_window_agg semantics)
-    batch = mk([(10, "wav"), (15, "wav"), (70, "pcm_s16le"), (290, "wav"),
-                (295, "wav"), (3600, "pcm_s16le")])
-    want = {
-        ((r["win"]["start"]), r["codec"]): r["n"]
-        for r in batch.groupBy(
-            F.window("event_ts", "1 minute").alias("win"), "codec"
-        ).agg(F.count("*").alias("n")).collect()
-    }
-    closed = {k: v for k, v in want.items() if k[0] < w(60)}  # sentinel window open
-    assert {k: v for k, v in got.items() if k in closed} == closed
-
-
-def test_streaming_ivf_probe_matches_batch_ivf(spark, tmp_path):
-    """Store-then-search through the persistent IVF index in streaming
-    form (VERDICT r2 item 8): three drops of planted near-dup
-    embeddings drain through incremental_ivf_neardup against a
-    prebuilt codebook; the union of drained matches must equal the
-    batch ivf_topk pairs above the same threshold on the full input
-    (unordered pairs — streaming sees cross-batch pairs once, in
-    arrival order; batch scores both directions)."""
-    import numpy as np
-
-    from file_dedup_rust_spark.operators.ann import ivf_topk, train_codebook
-    from file_dedup_rust_spark.streaming.incremental import (
-        incremental_ivf_neardup,
-        read_store,
-    )
-
-    rng = np.random.default_rng(17)
-    n, d = 240, 32
-    V = rng.standard_normal((n, d))
-    V /= np.linalg.norm(V, axis=1, keepdims=True)
-    rows = [(i, V[i].tolist()) for i in range(n)]
-    for j, i in enumerate(range(0, n, 5)):  # planted near-copies
-        g = rng.standard_normal(d)
-        g /= np.linalg.norm(g)
-        w = V[i] + 0.25 * g
-        w /= np.linalg.norm(w)
-        rows.append((n + j, w.tolist()))
-    full = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    codebook = train_codebook(full, k=16, sample_cap=4096, seed=5)
-
-    landing = str(tmp_path / "emb-landing")
-    store = str(tmp_path / "emb-store")
-    out = str(tmp_path / "emb-matches")
-    ck = str(tmp_path / "emb-ck")
-    third = len(rows) // 3
-    for i in range(3):
-        chunk = rows[i * third : (i + 1) * third if i < 2 else len(rows)]
-        spark.createDataFrame(
-            chunk, "vec_id long, embedding array<double>"
-        ).coalesce(1).write.mode("append").parquet(landing)
-        q = incremental_ivf_neardup(
-            spark, landing, store, out, ck, codebook,
-            threshold=0.9, cells_m=8,
-        )
-        q.awaitTermination(180)
-
-    streamed = {
-        (min(r.vec_id, r.neighbor_id), max(r.vec_id, r.neighbor_id))
-        for r in read_store(spark, out).collect()
-    }
-    batch = {
-        (min(r.vec_id, r.neighbor_id), max(r.vec_id, r.neighbor_id))
-        for r in ivf_topk(
-            full, top_k=10, assign_m=8, nprobe=8, codebook=codebook
-        ).filter(F.col("sim") >= 0.9).collect()
-    }
-    assert len(batch) >= 30  # the planting actually planted
-    assert streamed == batch
-    # the cell store accumulated every vector, cells_m rows each
-    assert read_store(spark, store).count() == len(rows) * 8
-
-
 def test_streaming_posting_probe_caps_hot_keys(spark, cfg, tmp_path):
     """VERDICT r3: the probe against the accumulated posting store must
     apply the batch engine's band-cap defense — a hot key (a 31-member
@@ -629,67 +471,6 @@ def test_streaming_posting_probe_caps_hot_keys(spark, cfg, tmp_path):
     # store members x every probing child) never ran, and the drop is
     # visible in the manifest instead of silent
     assert not any(c == hot_child for c, _ in corpus_audio)
-
-
-def test_streaming_decontam_matches_batch(spark, tmp_path):
-    """The ingest-time decontamination probe must flag EXACTLY the
-    clips the batch operator flags, independent of how the landing
-    data splits into micro-batches (the eval side is static, so the
-    probe is stateless per batch and parity is exact, not
-    approximate)."""
-    from file_dedup_rust_spark.operators.decontaminate import (
-        contamination_hits,
-    )
-    from file_dedup_rust_spark.streaming.incremental import (
-        read_store,
-        streaming_decontam,
-    )
-
-    pdf = datagen.generate_clips_pandas(150, seed=42)
-    clips = spark.createDataFrame(pdf, schema=datagen.CLIP_SCHEMA)
-    # eval split: every 5th clip's transcript is "benchmark" text —
-    # the other clips that duplicate those transcripts (datagen's
-    # exact/transcript_near roles) are the planted contamination
-    docs = clips.select(
-        "clip_id", F.lower(F.coalesce("transcript", F.lit(""))).alias("t")
-    )
-    ev = docs.filter(F.abs(F.hash("clip_id")) % 5 == 0).select(
-        F.col("clip_id").alias("doc_id"), "t"
-    )
-    train = docs.filter(F.abs(F.hash("clip_id")) % 5 != 0)
-
-    landing = str(tmp_path / "landing")
-    # two uneven full-schema drops -> at least two micro-batches
-    train_ids = {r["clip_id"] for r in train.select("clip_id").collect()}
-    train_pdf = pdf[pdf.clip_id.isin(train_ids)]
-    spark.createDataFrame(
-        train_pdf.iloc[:40], schema=datagen.CLIP_SCHEMA
-    ).coalesce(1).write.mode("overwrite").parquet(f"{landing}/drop=1")
-    spark.createDataFrame(
-        train_pdf.iloc[40:], schema=datagen.CLIP_SCHEMA
-    ).coalesce(1).write.mode("append").parquet(f"{landing}/drop=2")
-
-    out = str(tmp_path / "hits")
-    q = streaming_decontam(
-        spark, landing, ev, out, str(tmp_path / "ckpt"), n=8
-    )
-    assert q.awaitTermination(300)
-    q.eval_grams.unpersist()  # the documented cleanup handle
-
-    got_df = read_store(spark, out)
-    assert got_df is not None
-    got = {
-        (r["clip_id"], r["n_gram_hits"], r["n_eval_docs"])
-        for r in got_df.collect()
-    }
-    want = {
-        (r["doc_id"], r["n_gram_hits"], r["n_eval_docs"])
-        for r in contamination_hits(
-            train.withColumnRenamed("clip_id", "doc_id"), ev, 8
-        ).collect()
-    }
-    assert want, "fixture must plant at least one contaminated clip"
-    assert got == want
 
 
 def test_streaming_audio_containment_probe(spark, cfg, tmp_path):
@@ -1019,197 +800,3 @@ def test_store_survives_schema_upgrade_after_compaction(spark, tmp_path):
     assert [r["clip_id"] for r in with_trim] == ["c9"]
     # the probe-side filter pattern excludes pre-upgrade rows cleanly
     assert df.filter(F.col("trim_sha") != "").count() == 1
-
-
-def test_streaming_hll_registers_match_batch_exactly(spark, tmp_path):
-    """The ingest-time HLL register store folds to BIT-IDENTICAL
-    registers (and estimates) as one batch sketch over the whole
-    landing set, under two different arrival orders — register max is
-    order/split/replay-invariant by construction."""
-    from file_dedup_rust_spark.operators.corpus_sketch import (
-        hll_estimate,
-        hll_registers,
-        merge_hll_registers,
-    )
-    from file_dedup_rust_spark.streaming.incremental import (
-        read_store,
-        streaming_hll_registers,
-    )
-
-    pdf = datagen.generate_clips_pandas(150, seed=42)
-    clips = spark.createDataFrame(pdf, schema=datagen.CLIP_SCHEMA)
-    want_regs = {
-        (r["g"], r["b"], r["mr"])
-        for r in hll_registers(
-            clips.select(
-                "codec",
-                F.lower(F.coalesce("transcript", F.lit(""))).alias("t"),
-            ),
-            "codec",
-            "t",
-        ).collect()
-    }
-    want_est = {
-        r["g"]: r["hll_estimate"]
-        for r in hll_estimate(
-            hll_registers(
-                clips.select(
-                    "codec",
-                    F.lower(F.coalesce("transcript", F.lit(""))).alias("t"),
-                ),
-                "codec",
-                "t",
-            )
-        ).collect()
-    }
-
-    for tag, order in (("fwd", False), ("rev", True)):
-        landing = str(tmp_path / f"landing_{tag}")
-        part = pdf.iloc[::-1] if order else pdf
-        spark.createDataFrame(
-            part.iloc[:55], schema=datagen.CLIP_SCHEMA
-        ).coalesce(1).write.mode("overwrite").parquet(f"{landing}/drop=1")
-        spark.createDataFrame(
-            part.iloc[55:], schema=datagen.CLIP_SCHEMA
-        ).coalesce(1).write.mode("append").parquet(f"{landing}/drop=2")
-        out = str(tmp_path / f"regs_{tag}")
-        q = streaming_hll_registers(
-            spark, landing, out, str(tmp_path / f"ckpt_{tag}")
-        )
-        assert q.awaitTermination(300)
-        store = read_store(spark, out)
-        assert store is not None
-        folded = merge_hll_registers(store)
-        got = {(r["g"], r["b"], r["mr"]) for r in folded.collect()}
-        assert got == want_regs, tag
-        got_est = {
-            r["g"]: r["hll_estimate"] for r in hll_estimate(folded).collect()
-        }
-        assert got_est == want_est, tag
-
-
-def test_streaming_cms_counters_match_batch_exactly(spark, tmp_path):
-    """The ingest-time Count-Min counter store folds to the
-    BIT-IDENTICAL counter table as one batch sketch over the whole
-    landing set, under two arrival orders — the CMS is a linear
-    sketch, so per-batch counter deltas sum to the union's counters
-    regardless of order or split.  Every landed token's folded
-    estimate respects the one-sided guarantee (estimate >= its true
-    corpus count) through the streaming path too."""
-    from file_dedup_rust_spark.operators.corpus_sketch import (
-        cms_counters,
-        cms_estimate,
-        merge_cms,
-    )
-    from file_dedup_rust_spark.streaming.incremental import (
-        read_store,
-        streaming_cms_counters,
-    )
-
-    pdf = datagen.generate_clips_pandas(150, seed=42)
-    clips = spark.createDataFrame(pdf, schema=datagen.CLIP_SCHEMA)
-    census = (
-        clips.select(
-            F.explode(
-                F.split(F.lower(F.coalesce("transcript", F.lit(""))), " ")
-            ).alias("w")
-        )
-        .groupBy("w")
-        .agg(F.count("*").alias("c"))
-    )
-    want = {
-        (r["lane"], r["bkt"]): r["bc"]
-        for r in cms_counters(census).collect()
-    }
-
-    for tag, order in (("fwd", False), ("rev", True)):
-        landing = str(tmp_path / f"landing_{tag}")
-        part = pdf.iloc[::-1] if order else pdf
-        spark.createDataFrame(
-            part.iloc[:55], schema=datagen.CLIP_SCHEMA
-        ).coalesce(1).write.mode("overwrite").parquet(f"{landing}/drop=1")
-        spark.createDataFrame(
-            part.iloc[55:], schema=datagen.CLIP_SCHEMA
-        ).coalesce(1).write.mode("append").parquet(f"{landing}/drop=2")
-        out = str(tmp_path / f"cms_{tag}")
-        q = streaming_cms_counters(
-            spark, landing, out, str(tmp_path / f"cmsckpt_{tag}")
-        )
-        assert q.awaitTermination(300)
-        store = read_store(spark, out)
-        assert store is not None
-        folded = merge_cms(store)
-        got = {
-            (r["lane"], r["bkt"]): r["bc"] for r in folded.collect()
-        }
-        assert got == want, tag
-        # one-sided guarantee through the streaming path: folded
-        # estimates never undercount any landed token
-        est = cms_estimate(folded, census.select("w"))
-        joined = census.join(est, "w").collect()
-        assert joined and all(
-            r["cms_estimate"] >= r["c"] for r in joined
-        ), tag
-
-
-def test_streaming_bloom_bits_match_batch_exactly(spark, tmp_path):
-    """The ingest-time Bloom bit store folds to the BIT-IDENTICAL
-    occupied-bucket set as one batch sketch over the whole landing
-    set, under two arrival orders — set union is order/split/replay-
-    invariant by construction.  A replayed drop changes nothing, and
-    every landed transcript probes to bloom_hit=1 against the folded
-    sketch (zero false negatives through the streaming path too)."""
-    from file_dedup_rust_spark.operators.corpus_sketch import (
-        bloom_bits,
-        bloom_probe,
-        merge_bloom,
-    )
-    from file_dedup_rust_spark.streaming.incremental import (
-        read_store,
-        streaming_bloom_bits,
-    )
-
-    pdf = datagen.generate_clips_pandas(150, seed=42)
-    clips = spark.createDataFrame(pdf, schema=datagen.CLIP_SCHEMA)
-    docs = clips.select(
-        F.lower(F.coalesce("transcript", F.lit(""))).alias("t")
-    )
-    want = {(r["lane"], r["bkt"]) for r in bloom_bits(docs).collect()}
-
-    for tag, order in (("fwd", False), ("rev", True)):
-        landing = str(tmp_path / f"landing_{tag}")
-        part = pdf.iloc[::-1] if order else pdf
-        spark.createDataFrame(
-            part.iloc[:55], schema=datagen.CLIP_SCHEMA
-        ).coalesce(1).write.mode("overwrite").parquet(f"{landing}/drop=1")
-        spark.createDataFrame(
-            part.iloc[55:], schema=datagen.CLIP_SCHEMA
-        ).coalesce(1).write.mode("append").parquet(f"{landing}/drop=2")
-        out = str(tmp_path / f"bloom_{tag}")
-        q = streaming_bloom_bits(
-            spark, landing, out, str(tmp_path / f"bckpt_{tag}")
-        )
-        assert q.awaitTermination(300)
-        store = read_store(spark, out)
-        assert store is not None
-        folded = merge_bloom(store)
-        got = {(r["lane"], r["bkt"]) for r in folded.collect()}
-        assert got == want, tag
-        # replaying a drop is a no-op (idempotent union)
-        replayed = merge_bloom(
-            folded,
-            bloom_bits(
-                spark.createDataFrame(
-                    part.iloc[:55], schema=datagen.CLIP_SCHEMA
-                ).select(
-                    F.lower(F.coalesce("transcript", F.lit(""))).alias("t")
-                )
-            ),
-        )
-        assert {(r["lane"], r["bkt"]) for r in replayed.collect()} == want
-        # zero false negatives through the streaming path
-        probe = docs.withColumn(
-            "id", F.xxhash64("t")
-        ).dropDuplicates(["id"])
-        hits = bloom_probe(folded, probe, "id").collect()
-        assert hits and all(r["bloom_hit"] == 1 for r in hits), tag
